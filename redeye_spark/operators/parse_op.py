@@ -1,6 +1,6 @@
 """The parse operator: tokenized sequences -> parsed events.
 
-One mapInPandas exchange does detokenize + regex parse + error classify
+One mapInArrow exchange does detokenize + regex parse + error classify
 (Arrow-batched; the only Python hop in the whole plan — everything before
 it is a columnar scan, everything after is JVM-side Catalyst). This
 lifts the reference's per-line loop (src/bin/redeye.rs:82-89) into a
@@ -35,7 +35,7 @@ def parse_sequences(
 
     carry_tokens=False prunes the token array immediately after the parse:
     at 10^12 rows the raw bytes dominate width, and Catalyst cannot prune
-    columns *through* a mapInPandas boundary, so the choice happens here.
+    columns *through* a mapInArrow boundary, so the choice happens here.
     """
     if num_partitions:
         df = df.repartition(num_partitions)

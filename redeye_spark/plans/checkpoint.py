@@ -2,11 +2,11 @@
 
 Spark batch jobs have no built-in partial-resume; this implements it at
 the plan level: the input keyspace is split into deterministic chunks,
-each chunk runs as an independent pipeline pass appending to the same
-sinks, and a manifest records per-chunk lineage (input fingerprint, row
-counts, wall time, config). Resume skips chunks whose manifest entry is
-complete, so a killed run continues where it stopped and the final
-sinks are identical to an uninterrupted run (FIXTURES §3.5).
+each chunk is one pipeline commit unit replacing only its own partitions
+of the same sinks, and a manifest records per-chunk lineage (input
+fingerprint, row counts, wall time, config). Resume skips chunks whose
+manifest entry is complete, so a killed run continues where it stopped
+and the final sinks are identical to an uninterrupted run (FIXTURES §3.5).
 
 Two chunking modes:
   * hash mode (default): chunk_id = pmod(xxhash64(doc_id), n_chunks) —
@@ -31,9 +31,8 @@ import time
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from .pipeline import PipelineConfig, build_tagged
+from .pipeline import PipelineConfig, build_tagged, commit_unit, row_totals
 from ..operators import aggregate as agg_op
-from ..operators import route as route_op
 from ..sources.io import TableIO
 
 MANIFEST = "manifest.json"
@@ -151,9 +150,9 @@ def run_checkpointed(
 ) -> dict:
     """Run the pipeline chunk-by-chunk with resume.
 
-    Returns the manifest. Sinks receive one append per chunk; aggregates
-    are written per-chunk and re-aggregated on read (sum of partial
-    counts — associative, so chunking never changes results).
+    Returns the manifest. Each chunk is one `commit_unit` keyed by
+    chunk_id; its partial counts are re-aggregated on read (`final_counts`:
+    sums are associative, so chunking never changes results).
     """
     cfg = cfg or PipelineConfig()
     manifest = load_manifest(checkpoint_dir)
@@ -224,55 +223,27 @@ def run_checkpointed(
 
         # part_id records the physical parse partition per row, so the
         # manifest can carry per-partition metrics (north_rule lineage).
-        tagged = (
-            build_tagged(spark, part, cfg, source_dim)
-            .withColumn("chunk_id", F.lit(chunk))
-            .withColumn("part_id", F.spark_partition_id())
-        )
-        # Idempotent commit unit: each chunk overwrites only its own
-        # chunk_id=... partitions, so a rerun of a half-written chunk
-        # (killed after the sink write but before the manifest write)
-        # replaces rather than duplicates. No persist — the committed
-        # chunk partitions are the reuse point (partition-pruned reads).
-        io.write(tagged, events_table, mode="overwrite_partitions", partition_by=["chunk_id", "sink"])
-        chunk_events = io.read(spark, events_table).filter(F.col("chunk_id") == chunk)
-        counts = (
-            agg_op.salted_counts(chunk_events, cfg.bucket_granularity, cfg.salt_buckets)
-            if cfg.use_salted_agg
-            else agg_op.sink_counts(chunk_events, cfg.bucket_granularity)
-        ).withColumn("chunk_id", F.lit(chunk))
-        io.write(counts, agg_table, mode="overwrite_partitions", partition_by=["chunk_id"])
-        # ONE metric scan per chunk: (part_id, sink) cells are bounded
-        # (parse partitions x routes) and roll up client-side into both
-        # the per-sink totals and the per-partition lineage metrics —
-        # previously two separate scans of the committed chunk
-        metric_rows = (
-            chunk_events.groupBy("part_id", "sink")
+        tagged = build_tagged(spark, part, cfg, source_dim).withColumn("part_id", F.spark_partition_id())
+        per_sink = commit_unit(spark, tagged, io, cfg, events_table, agg_table,
+                               key={"chunk_id": chunk})
+        # The one extra scan per chunk (Observation counters cannot group):
+        # a partition-pruned read of the committed chunk, two narrow columns.
+        parts = (
+            io.read(spark, events_table, schema=tagged.schema)
+            .filter(F.col("chunk_id") == chunk)
+            .groupBy("part_id")
             .agg(
                 F.count(F.lit(1)).alias("rows"),
                 F.count(F.when(F.col("error_kind").isNotNull(), 1)).alias("err"),
             )
             .collect()
         )
-        per_sink: dict = {}
-        parts: dict = {}
-        for r in metric_rows:
-            per_sink[r["sink"]] = per_sink.get(r["sink"], 0) + r["rows"]
-            p = parts.setdefault(r["part_id"], {"rows": 0, "err": 0})
-            p["rows"] += r["rows"]
-            p["err"] += r["err"]
-        per_partition = [
-            {"part_id": pid, "rows": v["rows"], "err": v["err"]}
-            for pid, v in sorted(parts.items())
-        ]
+        per_partition = sorted((r.asDict() for r in parts), key=lambda p: p["part_id"])
 
-        rows_err = per_sink.get(route_op.DEAD_LETTER, 0)
         manifest["chunks"][str(chunk)] = {
             "status": "complete",
             "input": fps[chunk],
-            "rows_in": sum(per_sink.values()),
-            "rows_ok": sum(per_sink.values()) - rows_err,
-            "rows_err": rows_err,
+            **row_totals(per_sink),
             "sinks": per_sink,
             "partitions": per_partition,
             "chunk_values": values[chunk] if chunk_by else None,

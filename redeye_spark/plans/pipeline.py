@@ -1,15 +1,14 @@
-"""End-to-end pipeline plan: scan -> repartition -> parse (one Arrow UDF)
--> broadcast enrich -> route tag -> {partitioned sink write, per-sink
-aggregate counts}.
+"""End-to-end pipeline plan: scan -> parse (one Arrow UDF) -> codegen
+enrich -> route tag -> {partitioned sink write, per-sink aggregate counts}.
 
 This is the declarative analog of redeye's per-line loop
 (src/bin/redeye.rs:82-89), built so Catalyst keeps everything except the
-single mapInPandas exchange inside whole-stage codegen:
+single mapInArrow exchange inside whole-stage codegen:
 
   scan(parquet/iceberg)                  — columnar, pruned
-  repartition(n)                        — explicit, round-robin (even UDF load)
-  mapInPandas(detok+parse+classify)     — the only Python hop
-  broadcast joins ×3                    — map-side, no shuffle
+  repartition(n)                        — optional, round-robin (even UDF load)
+  mapInArrow(detok+parse+classify)      — the only Python hop
+  enrich (case expressions)             — codegen; a source dim still joins
   tag sink (case expression)            — codegen
   write partitionBy(sink)               — single pass over the data
   groupBy(sink,bucket,keys).count()     — salted two-phase option
@@ -77,37 +76,62 @@ def build_tagged(
     return route_op.tag_routes(enriched, cfg.routes)
 
 
-@dataclass
-class PipelineResult:
-    rows_in: int
-    rows_ok: int
-    rows_err: int
-    sink_rows: dict[str, int]
-    wall_sec: float
+# Writer tuning for the events sink (measured at 2 cores / 1.2M rows:
+# ~24 s -> ~21 s for the write job): columns that are unique-ish per row
+# BY CONSTRUCTION (ids, raw message, per-event timestamps, hosts, byte
+# counts) gain nothing from parquet dictionary encoding — the writer
+# builds a dictionary per column chunk only to fall back to plain — and
+# the default 1 MB page granularity spends measurable CPU on page
+# flush/headers for wide rows. Dictionaries stay ON where values repeat:
+# method, protocol, status_code, source, ua, version, error_kind, and the
+# URLs (turning off requested_url/uri's alone raised the sink's bytes/row
+# ~6% on a 160k-row combined-format corpus).
+EVENTS_WRITER_OPTIONS = {
+    **{
+        f"parquet.enable.dictionary#{c}": "false"
+        for c in (
+            "doc_id", "message", "timestamp_str", "timestamp",
+            "remote_host", "content_length",
+        )
+    },
+    "parquet.page.size": str(4 * 1024 * 1024),
+    "parquet.page.row.count.limit": "200000",
+    # page-level CRC32s are optional parquet metadata that Spark's
+    # reader does not verify by default; computing them on every
+    # page of a 100+ MB/task stream is pure writer CPU (measured:
+    # ~2 s of a 15 s 2-core write job, stable across runs)
+    "parquet.page.write-checksum.enabled": "false",
+}
 
 
-def run_pipeline(
+def _on_key(df: DataFrame, key: dict) -> DataFrame:
+    for k, v in key.items():
+        df = df.filter(F.col(k) == v)
+    return df
+
+
+def commit_unit(
     spark: SparkSession,
-    raw: DataFrame,
+    tagged: DataFrame,
     io: TableIO,
-    cfg: PipelineConfig | None = None,
-    source_dim: DataFrame | None = None,
-    events_table: str = "events",
-    agg_table: str = "agg_counts",
-    write_mode: str = "overwrite",
-) -> PipelineResult:
-    """Execute the full plan: ONE pass parses and writes all sinks (the
-    per-sink counters ride that same job as Observation metrics), then
-    a cheap column-pruned pass over the committed events table computes
-    the aggregate table."""
-    cfg = cfg or PipelineConfig()
-    t0 = time.monotonic()
-
+    cfg: PipelineConfig,
+    events_table: str,
+    agg_table: str,
+    key: dict,
+) -> dict:
+    """Commit one unit — a whole run (key={}) or a checkpoint chunk
+    (key={"chunk_id": c}) — and return its rows per sink: ONE pass parses
+    and writes the events (the per-sink counters ride that same job as
+    Observation metrics), then a cheap column-pruned pass over the
+    committed events writes the unit's aggregate counts. A keyed unit
+    overwrites only its own key partitions of both tables, so a rerun of
+    a half-written chunk replaces rather than duplicates."""
     # No persist: the committed events table IS the reuse point. The parse
     # UDF runs exactly once (the sink write); the aggregate pass re-reads
     # the columnar sink with column pruning (5 narrow columns), which at
     # any scale beats caching the full wide stream on-heap.
-    tagged = build_tagged(spark, raw, cfg, source_dim)
+    tagged = tagged.withColumns({k: F.lit(v) for k, v in key.items()})
+    mode = "overwrite_partitions" if key else "overwrite"
     # Per-sink counters ride the sink-write job itself via df.observe —
     # zero extra jobs (previously a third job re-read the agg table to
     # sum them). Observation aggregates can't groupBy, but the route
@@ -132,34 +156,8 @@ def run_pipeline(
             ],
             F.sum(F.col("sink").isNull().cast("long")).alias("_null_sink"),
         )
-    # Writer tuning for the events sink (measured at 2 cores / 1.2M rows:
-    # ~24 s -> ~21 s for the write job): columns that are unique-ish per
-    # row BY CONSTRUCTION (ids, raw message, per-event timestamps/urls)
-    # gain nothing from parquet dictionary encoding — the writer builds
-    # a dictionary per column chunk only to fall back to plain — and the
-    # default 1 MB page granularity spends measurable CPU on page
-    # flush/headers for wide rows. Dictionaries stay ON for the
-    # genuinely low-cardinality columns (method, protocol, status_code,
-    # source, ua, version, error_kind), which is where they pay at scale.
-    events_writer_options = {
-        **{
-            f"parquet.enable.dictionary#{c}": "false"
-            for c in (
-                "doc_id", "message", "timestamp_str", "timestamp",
-                "remote_host", "requested_url", "requested_uri",
-                "content_length",
-            )
-        },
-        "parquet.page.size": str(4 * 1024 * 1024),
-        "parquet.page.row.count.limit": "200000",
-        # page-level CRC32s are optional parquet metadata that Spark's
-        # reader does not verify by default; computing them on every
-        # page of a 100+ MB/task stream is pure writer CPU (measured:
-        # ~2 s of a 15 s 2-core write job, stable across runs)
-        "parquet.page.write-checksum.enabled": "false",
-    }
-    io.write(tagged, events_table, mode=write_mode, partition_by=["sink"],
-             options=events_writer_options)
+    io.write(tagged, events_table, mode=mode, partition_by=[*key, "sink"],
+             options=EVENTS_WRITER_OPTIONS)
 
     # The aggregate pass reads 4 narrow columns of the committed events
     # table — a few % of its file bytes after pruning. The session's
@@ -182,10 +180,11 @@ def run_pipeline(
     spark.conf.set(_SPLIT_KEY, str(128 * 1024 * 1024))
     spark.conf.set(_AQE_KEY, "false")
     try:
-        events_back = io.read(spark, events_table, schema=tagged.schema)
+        events_back = _on_key(io.read(spark, events_table, schema=tagged.schema), key)
         counts = agg_op.salted_counts(events_back, cfg.bucket_granularity, cfg.salt_buckets) \
             if cfg.use_salted_agg else agg_op.sink_counts(events_back, cfg.bucket_granularity)
-        io.write(counts, agg_table, mode=write_mode)
+        counts = counts.withColumns({k: F.lit(v) for k, v in key.items()})
+        io.write(counts, agg_table, mode=mode, partition_by=list(key) or None)
     finally:
         spark.conf.set(_SPLIT_KEY, prev_split)
         spark.conf.set(_AQE_KEY, prev_aqe)
@@ -200,18 +199,45 @@ def run_pipeline(
         }
         if int(metrics["_null_sink"] or 0) > 0:
             per_sink[None] = int(metrics["_null_sink"])
-    else:
-        per_sink = {
-            r["sink"]: r["n"]
-            for r in io.read(spark, agg_table)
-            .groupBy("sink").agg(F.sum("n").alias("n")).collect()
-        }
-    rows_err = per_sink.get(route_op.DEAD_LETTER, 0)
+        return per_sink
+    # a keyed agg table holds every unit's partial counts: sum this one's
+    return {
+        r["sink"]: r["n"]
+        for r in _on_key(io.read(spark, agg_table), key)
+        .groupBy("sink").agg(F.sum("n").alias("n")).collect()
+    }
+
+
+def row_totals(per_sink: dict) -> dict:
+    """rows_in / rows_ok / rows_err from a unit's rows per sink."""
     rows_in = sum(per_sink.values())
-    return PipelineResult(
-        rows_in=rows_in,
-        rows_ok=rows_in - rows_err,
-        rows_err=rows_err,
-        sink_rows=per_sink,
-        wall_sec=time.monotonic() - t0,
-    )
+    rows_err = per_sink.get(route_op.DEAD_LETTER, 0)
+    return {"rows_in": rows_in, "rows_ok": rows_in - rows_err, "rows_err": rows_err}
+
+
+@dataclass
+class PipelineResult:
+    rows_in: int
+    rows_ok: int
+    rows_err: int
+    sink_rows: dict[str, int]
+    wall_sec: float
+
+
+def run_pipeline(
+    spark: SparkSession,
+    raw: DataFrame,
+    io: TableIO,
+    cfg: PipelineConfig | None = None,
+    source_dim: DataFrame | None = None,
+    events_table: str = "events",
+    agg_table: str = "agg_counts",
+) -> PipelineResult:
+    """Execute the full plan as one `commit_unit`: a sink write that
+    parses once, then an aggregate pass over the committed events."""
+    cfg = cfg or PipelineConfig()
+    t0 = time.monotonic()
+    tagged = build_tagged(spark, raw, cfg, source_dim)
+    per_sink = commit_unit(spark, tagged, io, cfg, events_table, agg_table, key={})
+    return PipelineResult(**row_totals(per_sink), sink_rows=per_sink,
+                          wall_sec=time.monotonic() - t0)

@@ -68,6 +68,17 @@ def _local_dir() -> str | None:
     return None
 
 
+def driver_memory() -> str:
+    """$SPARK_GRAFT_DRIVER_MEM, else ~40% of host RAM capped at 48g.
+
+    In local mode the driver heap holds every executor thread's working
+    set, but it shares the host with the Python workers (one per task
+    slot) and the page cache, so a heap near RAM size gets the JVM
+    OOM-killed instead of garbage-collected."""
+    host_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(48 * 1024, host_mb * 2 // 5)}m"
+
+
 def get_spark(
     app_name: str = "redeye_spark",
     master: str | None = None,
@@ -76,17 +87,18 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    master defaults to $SPARK_GRAFT_MASTER or local[$SPARK_GRAFT_CPUS];
-    on a real cluster pass None and let spark-submit own it.
+    master defaults to $SPARK_GRAFT_MASTER or local[$SPARK_GRAFT_CPUS],
+    where the CPU count defaults to this process's usable cores; on a real
+    cluster pass None and let spark-submit own it.
     """
     builder = SparkSession.builder.appName(app_name)
     # local-mode driver == all executors: size the heap for the thread
     # count (default 1g thrashes with 32 concurrent parquet writers).
-    builder = builder.config(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-    ).config("spark.driver.maxResultSize", "4g")
+    builder = builder.config("spark.driver.memory", driver_memory()).config(
+        "spark.driver.maxResultSize", "4g"
+    )
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     if master:
         builder = builder.master(master)

@@ -481,6 +481,75 @@ class TestObserveCounterContract:
         assert res.sink_rows["sink_2xx"] + res.sink_rows[None] == 500
 
 
+class TestCommitUnit:
+    """run_pipeline and run_checkpointed share one commit unit, so a
+    chunked run must commit what an unchunked one does, at no extra jobs
+    beyond its own bookkeeping."""
+
+    K = ["sink", "bucket", "status_class", "method", "source"]
+
+    @pytest.fixture(scope="class")
+    def unchunked(self, spark, gen, tmp_path_factory):
+        _, raw = gen
+        io = ParquetIO(str(tmp_path_factory.mktemp("unchunked")))
+        res = run_pipeline(spark, raw, io, PipelineConfig(fmt=FORMAT_COMBINED))
+        return res, io.read(spark, "agg_counts").toPandas()
+
+    @pytest.mark.parametrize("chunk_by", [None, "source"])
+    def test_runners_agree(self, spark, gen, unchunked, tmp_path_factory, chunk_by):
+        _, raw = gen
+        res, agg = unchunked
+        base = str(tmp_path_factory.mktemp("agree"))
+        io = ParquetIO(base + "/out")
+        m = run_checkpointed(spark, raw, io, base + "/ck", PipelineConfig(fmt=FORMAT_COMBINED),
+                             n_chunks=3, chunk_by=chunk_by)
+        fc = final_counts(spark, io).toPandas()
+        pd.testing.assert_frame_equal(
+            fc[agg.columns].sort_values(self.K).reset_index(drop=True),
+            agg.sort_values(self.K).reset_index(drop=True),
+        )
+        sinks: dict = {}
+        for c in m["chunks"].values():
+            for s, n in c["sinks"].items():
+                sinks[s] = sinks.get(s, 0) + n
+        assert sinks == res.sink_rows
+
+    @pytest.mark.parametrize("chunk_by", [None, "source"])
+    def test_one_chunk_runs_no_extra_jobs(self, spark, gen, tmp_path_factory, chunk_by):
+        """A 1-chunk run may add only its fingerprint, value-assignment
+        and per-partition metric jobs to run_pipeline's: a schema-inference
+        read-back, an AQE-split aggregate pass or a second metric scan
+        shows up here."""
+        from redeye_spark.plans.checkpoint import chunk_values, input_fingerprints
+
+        _, raw = gen
+        sc = spark.sparkContext
+        base = str(tmp_path_factory.mktemp("jobs"))
+        cfg = PipelineConfig(fmt=FORMAT_COMBINED)
+
+        def jobs(group, fn):
+            sc.setJobGroup(group, group)
+            try:
+                fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        tag = f"jobs-{chunk_by}"
+        pipeline = jobs(tag + "-pipeline", lambda: run_pipeline(spark, raw, ParquetIO(base + "/p"), cfg))
+        chunked = jobs(tag + "-chunked", lambda: run_checkpointed(
+            spark, raw, ParquetIO(base + "/c"), base + "/ck", cfg, n_chunks=1, chunk_by=chunk_by))
+        values = chunk_values(raw, chunk_by, 1) if chunk_by else None
+        assignment = jobs(tag + "-assign", lambda: chunk_values(raw, chunk_by, 1)) if chunk_by else 0
+        fingerprint = jobs(tag + "-fp", lambda: input_fingerprints(raw, 1, chunk_by, values))
+        events = ParquetIO(base + "/c").read(spark, "events")  # inference outside the groups
+        metrics = jobs(tag + "-metrics", lambda: events.filter(F.col("chunk_id") == 0)
+                       .groupBy("part_id").count().collect())
+        assert pipeline >= 1 and fingerprint >= 1 and metrics >= 1
+        assert chunked <= pipeline + assignment + fingerprint + metrics, \
+            (chunked, pipeline, assignment, fingerprint, metrics)
+
+
 class TestColumnarSourceFastPath:
     """parse_sequence_files (the pyarrow-reads-its-own-files parse) must
     be row-identical to scan -> parse_sequences, and the build_tagged
